@@ -1322,7 +1322,7 @@ def curation_pipeline_v2(spark, sf_dir):
     # entire six-stage chain (three Arrow kernels among them) runs as
     # a chain of single-task stages. Guarded: a real multi-split
     # table is left untouched. Same pattern as dedup_substrings.
-    from ballet_spark.cache import spread_small_input
+    from ballet_spark.cache import persist_tracked, spread_small_input
 
     all_docs = spread_small_input(all_docs)
     eval_docs = all_docs.filter(F.col("doc_id") % 10 == 0)
@@ -1333,15 +1333,18 @@ def curation_pipeline_v2(spark, sf_dir):
     scored = score_char_bigram_lm(train, lm, "text")
     # g1 is scanned by the NB fit action, NB scoring, and the final
     # DAG — persist the gate output so the LM kernel runs once.
-    # Lifecycle: the caller owns the returned DataFrame, so these two
-    # persists cannot be unpersisted here; they are gate-survivor
-    # projections (three narrow columns), small relative to any
-    # corpus this runs on, and the bench harness clearCache()s
-    # between draws. A production materialization would checkpoint
-    # through plans/materialize.py instead.
-    g1 = scored.filter(_sround(F.col("lm_logp"), 6) >= -1.78).select(
-        "doc_id", "lang", "text"
-    ).persist()
+    # Lifecycle: the caller owns the returned DataFrame, so this and
+    # the three persists below cannot be unpersisted here; they are
+    # registered under scope "curation", so release_caches("curation")
+    # / (None) frees them once the caller is done. A production
+    # materialization would checkpoint through plans/materialize.py
+    # instead.
+    g1 = persist_tracked(
+        scored.filter(_sround(F.col("lm_logp"), 6) >= -1.78).select(
+            "doc_id", "lang", "text"
+        ),
+        scope="curation",
+    )
 
     # 2. NB label-consistency gate (integer sign test, engine-exact)
     labeled = g1.withColumn("y", (F.col("lang") == "en").cast("int"))
@@ -1349,9 +1352,12 @@ def curation_pipeline_v2(spark, sf_dir):
     nb = score_nb_tokens(g1, model, "text")
     # g2 feeds dedup_lines, which scans its input for the winner agg
     # AND the join back — persist so the NB kernel runs once
-    g2 = nb.filter(
-        F.col("nb_pred") == (F.col("lang") == "en")
-    ).select("doc_id", "lang", "text").persist()
+    g2 = persist_tracked(
+        nb.filter(F.col("nb_pred") == (F.col("lang") == "en")).select(
+            "doc_id", "lang", "text"
+        ),
+        scope="curation",
+    )
 
     # 3. sub-document exact dedup on deterministic 5-word chunks.
     # Tokenize on \s+ (not ' '): the chunks are '\n'-joined and
@@ -1369,9 +1375,12 @@ def curation_pipeline_v2(spark, sf_dir):
     # references its corpus TWICE (gram probe pass + the final left
     # join), which would re-run dedup_lines' three shuffles per
     # reference
-    cleaned = dedup_lines(
-        seg, id_col="doc_id", text_col="t2", out_col="ct"
-    ).select("doc_id", "lang", F.col("ct").alias("text")).persist()
+    cleaned = persist_tracked(
+        dedup_lines(seg, id_col="doc_id", text_col="t2", out_col="ct").select(
+            "doc_id", "lang", F.col("ct").alias("text")
+        ),
+        scope="curation",
+    )
 
     # 4. decontaminate the cleaned text vs the eval slice
     dec = decontaminate(
@@ -1384,9 +1393,10 @@ def curation_pipeline_v2(spark, sf_dir):
     # apply_mixing's corpus side, and pack_sequences' window + shard
     # totals) — measured 12.2s of the query's 16.7s was re-running
     # dedup_lines + decontaminate once per reference
-    g4 = dec.filter(~F.col("contaminated")).select(
-        "doc_id", "lang", "text"
-    ).persist()
+    g4 = persist_tracked(
+        dec.filter(~F.col("contaminated")).select("doc_id", "lang", "text"),
+        scope="curation",
+    )
 
     # 5. mix to a fixed language target
     target = {"en": 0.5, "de": 0.125, "fr": 0.125, "es": 0.125, "zh": 0.125}

@@ -8,8 +8,16 @@ joins, sessionization, forward-fill backfill, skew handling and
 checkpointed materialization designed for 10^12-row web tables.
 """
 
+from pyspark.core.files import SparkFiles
+
 from ballet_spark.core import Feature, FeatureEngineeringPipeline
-from ballet_spark.session import get_spark
+from ballet_spark.session import get_spark, lazy_zip_invalidation
+
+# In a Python worker every task re-runs importlib.invalidate_caches();
+# see ballet_spark.session. Reused workers keep the patch; the driver
+# never gets it.
+if SparkFiles._is_running_on_worker:
+    lazy_zip_invalidation()
 
 __version__ = "0.1.0"
 

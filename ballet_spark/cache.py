@@ -69,9 +69,8 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     idles. A real many-split 100 TB table already has >= cores
     partitions and passes through untouched, so the extra exchange
     exists exactly when it is trivially cheap (input smaller than one
-    production split) and vanishes at scale. The canonical guard the
-    dedup operators have always used (dedup._spread), shared here so
-    every per-row-heavy operator applies the same rule.
+    production split) and vanishes at scale. The one guard every
+    per-row-heavy operator (dedup, similarity, text kernels) applies.
 
     Streaming DataFrames pass through untouched: their partition count
     is not knowable at plan time (``df.rdd`` is illegal on a stream)

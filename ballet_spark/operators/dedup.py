@@ -39,7 +39,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ballet_spark.cache import persist_tracked, release_caches  # noqa: F401 (re-export)
+from ballet_spark.cache import (  # noqa: F401 (release_caches re-exported)
+    persist_tracked,
+    release_caches,
+    spread_small_input,
+)
 
 # 2^31-1: affine permutations a*h+b stay < 2^62, no int64 overflow
 # under ANSI arithmetic while keeping a proper Mersenne-prime field.
@@ -85,16 +89,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         )
         .select(id_col, "content_md5", "n_copies")
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Single-file small inputs arrive as one partition; spread them
-    across cores before CPU-heavy shingle/signature stages (no-op when
-    the source is already parallel, e.g. a many-file 100 TB table).
-    Canonical implementation: :func:`ballet_spark.cache.spread_small_input`."""
-    from ballet_spark.cache import spread_small_input
-
-    return spread_small_input(df)
 
 
 def tokens_col(text_col):
@@ -309,7 +303,7 @@ def gram_hashes(
             )
             yield pa.RecordBatch.from_arrays([batch.column(0), arr], ["id", "hs"])
 
-    out = _spread(
+    out = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     ).mapInArrow(kernel, f"id {id_t}, hs array<bigint>")
     return out.filter(F.size("hs") > 0)
@@ -394,7 +388,7 @@ def _gram_hash_sig(
                 [batch.column(0), hs_arr, sig_arr], ["id", "hs", "signature"]
             )
 
-    out = _spread(
+    out = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     ).mapInArrow(
         kernel, f"id {id_t}, hs array<bigint>, signature array<bigint>"
@@ -765,7 +759,9 @@ def embedding_neardup_pairs(
     # recipe: dot-first matmul, one division, zero-norm→1 — exactly
     # semantic_dedup's kernel, proven hash-identical to the SQL
     # oracles' sequential-sum cosine at 4- and 6-decimal grids.
-    base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
+    base = spread_small_input(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    )
     id_t = df.schema[id_col].dataType.simpleString()
     bucketed = lsh_bucket_tables(
         base, "v", dim, n_planes, n_tables, seed
@@ -1077,25 +1073,25 @@ def decontaminate(
     # them with count 0.
     # synthetic id: the bench side never needed an id column (only its
     # gram SET matters) and callers may pass a text-only frame.
-    # _spread: "small by definition" still means thousands of docs —
-    # on a single-file eval slice the gram kernel otherwise runs its
-    # whole tokenize+hash pass on 1-2 tasks while the cluster idles
-    # (no-op on multi-split or already-spread inputs; the distinct()
-    # shuffles the 8-byte hashes regardless, so the exchange placement
-    # of the OUTPUT is unchanged)
+    # spread_small_input: "small by definition" still means thousands
+    # of docs — on a single-file eval slice the gram kernel otherwise
+    # runs its whole tokenize+hash pass on 1-2 tasks while the cluster
+    # idles (no-op on multi-split or already-spread inputs; the
+    # distinct() shuffles the 8-byte hashes regardless, so the exchange
+    # placement of the OUTPUT is unchanged)
     bench_grams = _gram_hash_rows(
-        _spread(bench_df.select(F.col(text_col))).select(
+        spread_small_input(bench_df.select(F.col(text_col))).select(
             F.lit(0).cast("long").alias("__bid"),
             tokens_col(F.col(text_col)).alias("__toks"),
         ),
         "__bid",
         n,
     ).select("gh").distinct()
-    # _spread: the tokenize + gram kernel of the CORPUS side is the
-    # query's dominant per-row work — on a single-small-file input it
-    # would run on 1-2 tasks (no-op on real multi-split tables)
+    # spread_small_input: the tokenize + gram kernel of the CORPUS side
+    # is the query's dominant per-row work — on a single-small-file
+    # input it would run on 1-2 tasks (no-op on real multi-split tables)
     train_grams = _gram_hash_rows(
-        _spread(train_df.select(F.col(id_col), F.col(text_col))).select(
+        spread_small_input(train_df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
         ),
         id_col,
@@ -1181,7 +1177,7 @@ def remove_frequent_lines(
     # spread before BOTH phases: the count-agg's explode and the
     # map-side rewrite otherwise run on a single small file's 1-2
     # tasks (no-op on real multi-split tables)
-    df = _spread(df)
+    df = spread_small_input(df)
     if freq is None:
         freq = frequent_lines(df, text_col, sep, min_df)
     out_col = out_col or text_col
@@ -1245,7 +1241,7 @@ def dedup_lines(
         raise ValueError("dedup_lines: out_col may not be 'n_removed'")
     # spread once, shared by the posexplode pass AND the join-back
     # (no-op on real multi-split tables)
-    df = _spread(df)
+    df = spread_small_input(df)
     segs = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(
@@ -1513,7 +1509,7 @@ def dedup_substrings(
     # small-input parallelization guard (no-op on real multi-split
     # tables): without it the whole fingerprint scan runs on however
     # few tasks a single small file yields
-    df = _spread(df)
+    df = spread_small_input(df)
 
     toks = F.filter(
         F.split(F.col(text_col), r"\s+", -1), lambda x: x != ""
@@ -1694,14 +1690,31 @@ def load_lsh_index(spark, name: str) -> "LshIndex":
     """Load a :func:`save_lsh_index` pair back WITH bucket metadata
     (``spark.table``, not ``read.parquet`` — a raw file read loses the
     distribution info and reintroduces the index-side shuffle).
-    Refuses an index whose band-hash format stamp is missing or
-    different: its bucket values were produced by another hash recipe,
-    so a probe would silently find nothing."""
+    Refuses, with its own ValueError, a name with no saved index, an
+    unstamped index (a save interrupted before its last step, or one
+    written before the stamp existed) and an index stamped under a
+    different band-hash recipe: its bucket values were produced by
+    another hash, so a probe would silently find nothing."""
+    missing = [
+        t for t in (f"{name}_buckets", f"{name}_grams")
+        if not spark.catalog.tableExists(t)
+    ]
+    if missing:
+        raise ValueError(
+            f"no LSH index {name!r}: table(s) {', '.join(missing)} do not "
+            "exist; build the index with save_lsh_index"
+        )
     props = {
         r["key"]: r["value"]
         for r in spark.sql(f"SHOW TBLPROPERTIES {name}_buckets").collect()
     }
     fmt = props.get("ballet_spark.band_hash")
+    if fmt is None:
+        raise ValueError(
+            f"LSH index {name!r} has no band-hash format stamp: its save "
+            "was interrupted before the stamp was written, or it predates "
+            "the stamp; rebuild the index with save_lsh_index"
+        )
     if fmt != BAND_HASH_FORMAT:
         raise ValueError(
             f"LSH index {name!r} was written under band-hash format "

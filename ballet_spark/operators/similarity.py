@@ -94,8 +94,6 @@ def cosine_topk(
     query (map-side combine), and one window takes the global top-k.
     Corpus is scanned once, never shuffled; only ≤ k·|partitions| rows
     per query reach the exchange."""
-    import pandas as pd
-
     q_pdf = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).dropna().toPandas()
@@ -120,36 +118,13 @@ def cosine_topk(
     q_norm[q_norm == 0.0] = 1.0
 
     def score(iterator):
+        # a module-level kernel: unpickling the closure imports
+        # ballet_spark in the worker, which installs its per-task
+        # import-cache fix (ballet_spark.session)
         for pdf in iterator:
-            keep = pdf["cv"].notna()
-            pdf = pdf[keep]
-            if not len(pdf):
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            c_mat = np.stack(pdf["cv"].to_numpy()).astype("float64")
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            c_norm[c_norm == 0.0] = 1.0
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)  # |batch|×|q|
-            frames = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand_ids, cand = ids[mask], col[mask]
-                if len(cand) > k:
-                    # partial top-k: largest k by (cosine desc, id asc)
-                    order = np.lexsort((cand_ids, -cand))[:k]
-                else:
-                    order = np.lexsort((cand_ids, -cand))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cand_ids[order],
-                            "cosine": cand[order],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            out = _batch_topk(pdf, q_ids, q_mat, q_norm, k)
+            if out is not None:
+                yield out
 
     # id columns keep their INPUT types (url strings are the repo's
     # primary entity key — a hardcoded `long` schema would fail the
@@ -161,6 +136,36 @@ def cosine_topk(
     )
     scored = c.mapInPandas(score, out_schema)
     return _rank_topk(scored, k)
+
+
+def _batch_topk(pdf, q_ids, q_mat, q_norm, k):
+    """One corpus batch's local top-k per query (``cosine_topk``'s
+    map-side combine); None when the batch has no non-NULL vector."""
+    pdf = pdf[pdf["cv"].notna()]
+    if not len(pdf):
+        return None
+    ids = pdf["neighbor_id"].to_numpy()
+    c_mat = np.stack(pdf["cv"].to_numpy()).astype("float64")
+    c_norm = np.linalg.norm(c_mat, axis=1)
+    c_norm[c_norm == 0.0] = 1.0
+    sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)  # |batch|×|q|
+    frames = []
+    for j, qid in enumerate(q_ids):
+        col = sims[:, j]
+        mask = ids != qid
+        cand_ids, cand = ids[mask], col[mask]
+        # partial top-k: largest k by (cosine desc, id asc)
+        order = np.lexsort((cand_ids, -cand))[:k]
+        frames.append(
+            pd.DataFrame(
+                {
+                    "query_id": qid,
+                    "neighbor_id": cand_ids[order],
+                    "cosine": cand[order],
+                }
+            )
+        )
+    return pd.concat(frames, ignore_index=True)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:

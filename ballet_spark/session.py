@@ -6,13 +6,28 @@ UTC session timezone so results compare bit-stably against external
 oracles, and shuffle partitions sized to the local core count (callers
 on a real cluster should set ``spark.sql.shuffle.partitions`` to
 ~2-3x total cores instead).
+
+Per-task cost of Python workers: before every task, pyspark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``.
+On CPython < 3.13 that makes every ``zipimport.zipimporter`` in
+``sys.path_importer_cache`` re-read its archive's whole central
+directory: 17-19 importers per task, 12 of them over the
+1,328-entry ``pyspark.zip``. That costs 0.12-0.28 CPU-s per task on a
+4-core VM, more than the Arrow kernels themselves spend on a 500-row
+batch. :func:`lazy_zip_invalidation` backports 3.13's behaviour (an
+unchanged archive is not re-read); ``ballet_spark/__init__.py``
+installs it once per worker process, and only in workers. On 3.13 and
+later it is a no-op. ``scripts/worker_task_cost.py`` re-measures the
+per-task cost with and without it.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -41,6 +56,48 @@ def ship_package(spark: SparkSession) -> None:
             stamp, "zip", os.path.dirname(pkg_dir), "ballet_spark"
         )
     spark.sparkContext.addPyFile(zip_path)
+
+
+# archive path -> its (inode, size, mtime_ns) when its directory was
+# last read; per process, like zipimport's own directory cache
+_READ_STAMPS: dict[str, tuple[int, int, int] | None] = {}
+
+
+def lazy_zip_invalidation() -> bool:
+    """Stop ``importlib.invalidate_caches()`` from re-reading unchanged
+    zip archives (CPython < 3.13).
+
+    Replaces ``zipimport.zipimporter.invalidate_caches`` with a version
+    that keeps the cached directory of an archive whose (inode, size,
+    mtime_ns) has not changed since the directory was last re-read; a
+    changed, missing or not yet re-read archive is re-read eagerly, as
+    before. CPython 3.13 made the invalidation lazy upstream, so there
+    this changes nothing. Idempotent; returns whether the method is
+    patched after the call.
+    """
+    if sys.version_info >= (3, 13):
+        return False
+    eager = zipimport.zipimporter.invalidate_caches
+    if eager.__module__ == __name__:
+        return True
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and _READ_STAMPS.get(self.archive, ()) == stamp:
+            # importers of one archive share its directory; take the
+            # one another importer may have re-read since
+            self._files = files
+            return
+        eager(self)
+        _READ_STAMPS[self.archive] = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def _default_local_dir() -> str | None:

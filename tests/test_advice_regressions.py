@@ -874,10 +874,22 @@ def test_lsh_index_band_hash_format_stamp(spark):
         "ALTER TABLE fmt_stamp_test_buckets SET TBLPROPERTIES "
         "('ballet_spark.band_hash' = 'legacy-concat-v1')"
     )
-    with pytest.raises(ValueError, match="band-hash format"):
+    with pytest.raises(ValueError, match="written under band-hash format"):
+        load_lsh_index(spark, "fmt_stamp_test")
+    # an unstamped index (a save interrupted before the stamp, or one
+    # older than the stamp) is told apart from a different recipe
+    spark.sql(
+        "ALTER TABLE fmt_stamp_test_buckets UNSET TBLPROPERTIES "
+        "('ballet_spark.band_hash')"
+    )
+    with pytest.raises(ValueError, match="has no band-hash format stamp"):
         load_lsh_index(spark, "fmt_stamp_test")
     for t in ("fmt_stamp_test_buckets", "fmt_stamp_test_grams"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+    # a missing index raises the loader's own error, not the raw
+    # SHOW TBLPROPERTIES AnalysisException
+    with pytest.raises(ValueError, match="no LSH index 'fmt_stamp_test'"):
+        load_lsh_index(spark, "fmt_stamp_test")
 
 
 def test_decode_jpeg_truncated_segment_header_value_error():

@@ -85,6 +85,20 @@ def test_query_vs_oracle(spark, ddb, name):
     _compare(got, exp, name)
 
 
+def test_curation_v2_leaves_no_persisted_rdds(spark):
+    """Every persist curation_pipeline_v2 makes is registered, so
+    release_caches(None) frees them all once the caller is done."""
+    from ballet_spark.cache import release_caches
+
+    release_caches(None)  # an earlier run of the leaf may still be cached
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert QUERIES["curation_pipeline_v2"](spark, SF_DIR).count() > 0
+    assert set(jsc.getPersistentRDDs().keySet()) - before
+    release_caches(None)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_minhash_recall_against_exact(spark):
     """minhash_lsh_dups (no SQL oracle) must reproduce the exact
     ngram-jaccard pair set at its threshold (recall ≈ 1 by band math)."""
