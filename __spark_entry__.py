@@ -512,9 +512,10 @@ def incremental_exact_dedup(spark, sf_dir):
     snapshot's hash table or earlier (min id) in its own batch. The
     oracle replays the precedence in SQL."""
     from ballet_spark.operators.dedup import exact_dedup_incremental
+    from ballet_spark.session import local_frame
 
     docs = _t(spark, sf_dir, "documents")
-    empty = spark.createDataFrame([], "content_md5 string")
+    empty = local_frame(spark, [], "content_md5 string")
     k1, h1 = exact_dedup_incremental(docs.filter(F.col("doc_id") % 2 == 0), empty)
     k2, _ = exact_dedup_incremental(
         docs.filter(F.col("doc_id") % 2 == 1), empty.unionByName(h1)
@@ -845,6 +846,7 @@ def discrete_mutual_information(spark, sf_dir):
     """EXACT distributed mutual information for discrete columns
     (V2's Shannon path: one groupBy count per marginal/joint — no
     sampling, runs at any scale). MI(event_type; high_value)."""
+    from ballet_spark.session import local_frame
     from ballet_spark.validation.entropy import shannon_entropy_spark
 
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -854,7 +856,8 @@ def discrete_mutual_information(spark, sf_dir):
     h_y = shannon_entropy_spark(ev, ["high_value"])
     h_xy = shannon_entropy_spark(ev, ["event_type", "high_value"])
     mi = max(0.0, h_x + h_y - h_xy)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(round(h_x, 6), round(h_y, 6), round(mi, 8))],
         "h_event_type double, h_high_value double, mi double",
     )
@@ -1510,6 +1513,7 @@ def gfssf_select_docs(spark, sf_dir):
     f_lang, target y_cls. Every CMI and both λs replay in the DuckDB
     oracle from the same GROUP BY CUBE counts, including the
     sequential prune's decision tree."""
+    from ballet_spark.session import local_frame
     from ballet_spark.validation.validators import gfssf_discrete_select
 
     c = _gfssf_base_cols()
@@ -1531,7 +1535,8 @@ def gfssf_select_docs(spark, sf_dir):
         (d["feature"], d["role"], r6(d["cmi_full"]), d["kept"], r6(d["h_y"]))
         for d in report
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "feature string, role string, cmi_full double, kept boolean, "
         "h_y double",

@@ -18,9 +18,21 @@ on (scope ``"serving"``).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 
 _PERSISTED: dict[str, list[DataFrame]] = {}
+
+# logical plan nodes that put a shuffle (>= spark.sql.shuffle.partitions
+# partitions) between the source and their output; ``Sort`` counts
+# whether global or not, since a spread would also drop a local order
+_SHUFFLE_NODES = frozenset({
+    "Repartition", "RepartitionByExpression", "RebalancePartitions",
+    "Aggregate", "Join", "Window", "Deduplicate", "Distinct", "Sort",
+    "Intersect", "Except", "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow",
+})
 
 
 def persist_tracked(df: DataFrame, scope: str = "dedup") -> DataFrame:
@@ -82,8 +94,9 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     plan that already contains a shuffle-introducing node (explicit
     repartition, aggregate, join, window, distinct, global sort)
     inherits >= spark.sql.shuffle.partitions parallelism downstream,
-    so the probe is skipped for those via one cheap analyzed-plan
-    string check; the probe (and possible spread) only runs for
+    so the probe is skipped for those via one check of the analyzed
+    plan's node classes (one ``toJSON`` call; column and table names
+    take no part in it); the probe (and possible spread) only runs for
     narrow map lineages over a source — the one shape that can
     actually be a single small file.
 
@@ -101,14 +114,10 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     if df.isStreaming:
         return df
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(
-            m in plan
-            for m in (
-                "Repartition", "Aggregate", "Join", "Window",
-                "Deduplicate", "Sort ",
-            )
-        ):
+        # the top-level entries are the plan nodes (expressions nest
+        # inside them), each with its fully qualified class name
+        nodes = json.loads(df._jdf.queryExecution().analyzed().toJSON())
+        if any(n["class"].rsplit(".", 1)[-1] in _SHUFFLE_NODES for n in nodes):
             return df
     except Exception:
         pass  # fall through to the exact probe

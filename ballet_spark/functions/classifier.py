@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ballet_spark.session import local_frame
+
 Q = 1_000_000  # microunit grid for log-probs (shared with functions/lm.py)
 
 
@@ -160,8 +162,8 @@ def fit_nb_tokens(
             "logp_q": np.concatenate([logp_q.ravel(), prior_q]),
         }
     )
-    return df.sparkSession.createDataFrame(
-        out, "cls int, bucket int, n long, logp_q long"
+    return local_frame(
+        df.sparkSession, out, "cls int, bucket int, n long, logp_q long"
     )
 
 

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ballet_spark.session import local_frame
+
 N_SYM = 129  # 0..127 ASCII, 128 OOV
 BOS = 129  # extra row in the "previous" dimension only
 Q = 1_000_000  # microunit grid for log-probs
@@ -124,8 +126,8 @@ def fit_char_bigram_lm(
             "logp_q": logp_q.ravel(),
         }
     )
-    return df.sparkSession.createDataFrame(
-        out, "prev int, cur int, n long, logp_q long"
+    return local_frame(
+        df.sparkSession, out, "prev int, cur int, n long, logp_q long"
     )
 
 

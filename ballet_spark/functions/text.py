@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ballet_spark.sources.webtext import extract_text, extract_title
+from ballet_spark.sources.webtext import extract_text
 
 # --------------------------------------------------------------------
 # HTML → text (byte-identical contract)
@@ -31,16 +31,8 @@ def extract_text_pdf(html: pd.Series) -> pd.Series:
     return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
 
 
-def extract_title_pdf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_title(bytes(b)) if b is not None else None)
-
-
 def extract_text_col(html: Column) -> Column:
     return F.pandas_udf(extract_text_pdf, "string")(html)
-
-
-def extract_title_col(html: Column) -> Column:
-    return F.pandas_udf(extract_title_pdf, "string")(html)
 
 
 # --------------------------------------------------------------------
@@ -68,16 +60,6 @@ def token_count(text: Column) -> Column:
     ).cast("bigint")
 
 
-def word_tokens(text: Column) -> Column:
-    """BPE-ish regex tokenization: words, numbers, or single
-    punctuation marks (array<string>)."""
-    return F.regexp_extract_all(text, F.lit(r"([A-Za-z]+|[0-9]+|[^A-Za-z0-9\s])"), 1)
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    return F.size(word_tokens(text)).cast("bigint")
-
-
 def _safe_ratio(num: Column, n: Column) -> Column:
     """num/n for n>0, 0.0 for n==0, NULL for NULL text — a NULL doc
     must NOT score as 'perfectly clean prose' (ratio 0.0) while the
@@ -101,12 +83,6 @@ def punct_ratio(text: Column) -> Column:
     n = F.length(text)
     punct = n - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     return _safe_ratio(punct, n)
-
-
-def upper_ratio(text: Column) -> Column:
-    n = F.length(text)
-    upper = n - F.length(F.regexp_replace(text, r"[A-Z]", ""))
-    return _safe_ratio(upper, n)
 
 
 def mean_word_len(text: Column) -> Column:
@@ -184,12 +160,6 @@ def lang_id_col(text: Column) -> Column:
 # --------------------------------------------------------------------
 # Document fingerprinting
 # --------------------------------------------------------------------
-
-
-def content_hash(text: Column) -> Column:
-    """Exact-dedup key; md5 is available in both Spark and DuckDB so
-    oracle checks can reproduce it."""
-    return F.md5(text)
 
 
 def rolling_fingerprint_pdf(text: pd.Series, k: int = 8, mod: int = 2**61 - 1) -> pd.Series:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ballet_spark.session import local_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -63,9 +65,10 @@ def connected_components(
     pairs = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
         eager=True
     )
-    n_edges = pairs.count()  # on checkpointed blocks — no recompute
-    if n_edges <= small_graph_threshold:
-        rows = pairs.collect()
+    # one bounded collect on the checkpointed blocks decides the path
+    # and, on a small graph, already holds every edge
+    rows = pairs.limit(small_graph_threshold + 1).collect()
+    if len(rows) <= small_graph_threshold:
         parent: dict = {}
 
         def find(x):
@@ -90,11 +93,12 @@ def connected_components(
                 parent[hi] = lo
         out = [(x, find(x)) for x in parent]
         schema = pairs.schema["a"].dataType.simpleString()
-        result = pairs.sparkSession.createDataFrame(
-            out, f"id {schema}, component {schema}"
+        result = local_frame(
+            pairs.sparkSession, out, f"id {schema}, component {schema}"
         )
         pairs.unpersist()
         return result
+    del rows  # past the cap: the distributed loop reads the blocks
     # symmetric closure: propagate along both directions of each pair
     edges = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # localCheckpoint (not just persist): each round's labels feed the

@@ -44,6 +44,7 @@ from ballet_spark.cache import (  # noqa: F401 (release_caches re-exported)
     release_caches,
     spread_small_input,
 )
+from ballet_spark.session import local_frame
 
 # 2^31-1: affine permutations a*h+b stay < 2^62, no int64 overflow
 # under ANSI arithmetic while keeping a proper Mersenne-prime field.
@@ -956,8 +957,8 @@ def minhash_lsh_index(
     id_type = df.schema[id_col].dataType.simpleString()
     spark = df.sparkSession
     empty = LshIndex(
-        buckets=spark.createDataFrame([], f"id {id_type}, band int, bucket long"),
-        grams=spark.createDataFrame([], f"id {id_type}, hs array<long>"),
+        buckets=local_frame(spark, [], f"id {id_type}, band int, bucket long"),
+        grams=local_frame(spark, [], f"id {id_type}, hs array<long>"),
     )
     _, idx = minhash_lsh_pairs_incremental(
         df,

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ballet_spark.session import local_frame
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -104,7 +106,7 @@ def cosine_topk(
         # no (non-NULL) queries: an empty top-k frame, not a
         # np.stack ValueError on the driver
         return (
-            corpus.sparkSession.createDataFrame([], out_schema)
+            local_frame(corpus.sparkSession, [], out_schema)
             .withColumn("rank", F.lit(0))
             .select("query_id", "neighbor_id", "rank", "cosine")
         )
@@ -183,11 +185,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
 def srp_planes(
     dim: int, n_planes: int, n_tables: int, seed: int = 42
 ) -> "np.ndarray":
@@ -197,16 +194,6 @@ def srp_planes(
     Spark and DuckDB). Shape (n_tables, n_planes, dim)."""
     rng = np.random.default_rng(seed)
     return np.round(rng.standard_normal((n_tables, n_planes, dim)), 6)
-
-
-def bucket_expr(vec_col: str, planes) -> Column:
-    """SRP bucket id of one table: sign bits of the plane projections.
-    Pure JVM fold — no Python in the scoring path."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = dot_expr(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
 
 
 def _bucket_udf(planes):
@@ -266,21 +253,6 @@ def lsh_bucket_tables(
     return bucketed.select(
         *df.columns, F.posexplode("__bks").alias("tbl", "bucket")
     )
-
-
-def lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane (SRP) LSH bucket id: sign bits of ``n_planes``
-    fixed seeded projections. Same-bucket vectors are cosine-close with
-    high probability; 2^n_planes buckets."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    return df.withColumn(out_col, bucket_expr(vec_col, planes))
 
 
 def cosine_topk_lsh(
@@ -509,8 +481,9 @@ def ivf_topk(
         # np.stack ValueError
         qt = queries.schema[query_id_col].dataType.simpleString()
         ct = corpus.schema[id_col].dataType.simpleString()
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {qt}, neighbor_id {ct}, rank int, cosine double"
+        return local_frame(
+            corpus.sparkSession, [],
+            f"query_id {qt}, neighbor_id {ct}, rank int, cosine double",
         )
     Q = np.stack(q_pdf["qv"].to_numpy()).astype("float64")
     d = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
@@ -526,8 +499,8 @@ def ivf_topk(
     ]
     spark = corpus.sparkSession
     qt = queries.schema[query_id_col].dataType.simpleString()
-    probe_df = spark.createDataFrame(
-        probe_rows, f"query_id {qt}, centroid_id int"
+    probe_df = local_frame(
+        spark, probe_rows, f"query_id {qt}, centroid_id int"
     )
 
     from ballet_spark.cache import spread_small_input

@@ -44,6 +44,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ballet_spark.session import local_frame
+
 LINEAGE_SCHEMA = (
     "feature_set string, input_snapshot string, unit int, "
     "row_count long, digest long, completed_at double, n_units int"
@@ -141,7 +143,9 @@ def completed_units(
     except Exception:
         pass  # probe unavailable (e.g. connect-only session): fall through
     try:
-        lin = spark.read.parquet(lineage_path)
+        # the known schema spares Spark its footer-reading inference
+        # job; a table written before ``n_units`` existed reads NULLs
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     except Exception as e:
         # errorClass is the stable contract; message substrings remain
         # only as a fallback for the probe-to-read race window
@@ -153,15 +157,13 @@ def completed_units(
         ):
             return set()
         raise
-    mine = lin.filter(
+    # ONE job: the (unit, n_units) rows themselves (one per completed
+    # unit), deduplicated on the driver, not two distinct() shuffles
+    rows = lin.filter(
         (F.col("feature_set") == fset) & (F.col("input_snapshot") == snapshot)
-    )
-    if n_units is not None and "n_units" in lin.columns:
-        seen = {
-            r["n_units"]
-            for r in mine.select("n_units").distinct().collect()
-            if r["n_units"] is not None
-        }
+    ).select("unit", "n_units").collect()
+    if n_units is not None:
+        seen = {r["n_units"] for r in rows if r["n_units"] is not None}
         if seen - {int(n_units)}:
             raise ValueError(
                 f"lineage for feature_set={fset} snapshot={snapshot} was "
@@ -170,7 +172,6 @@ def completed_units(
                 "— reuse the original n_units or materialize under a "
                 "new snapshot"
             )
-    rows = mine.select("unit").distinct().collect()
     return {r["unit"] for r in rows}
 
 
@@ -379,10 +380,10 @@ def materialize(
                 for u in batch
                 for c in out_cols
             ]
-            spark.createDataFrame(frows, FEATURE_LINEAGE_SCHEMA).write.mode(
+            local_frame(spark, frows, FEATURE_LINEAGE_SCHEMA).write.mode(
                 "append"
             ).parquet(feature_lineage_path)
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode(
+        local_frame(spark, lineage_rows, LINEAGE_SCHEMA).write.mode(
             "append"
         ).parquet(lineage_path)
         n_done += len(batch)
@@ -418,7 +419,7 @@ def read_matrix(
 
 def lineage_metrics(spark: SparkSession, lineage_path: str) -> DataFrame:
     """The lineage/metrics table (discovery analog, V13)."""
-    return spark.read.parquet(lineage_path)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
 
 
 def feature_lineage(spark: SparkSession, feature_lineage_path: str) -> DataFrame:
@@ -429,7 +430,7 @@ def feature_lineage(spark: SparkSession, feature_lineage_path: str) -> DataFrame
     (feature_set, feature, input_snapshot, unit)."""
     from pyspark.sql import Window
 
-    raw = spark.read.parquet(feature_lineage_path)
+    raw = spark.read.schema(FEATURE_LINEAGE_SCHEMA).parquet(feature_lineage_path)
     w = Window.partitionBy(
         "feature_set", "feature", "input_snapshot", "unit"
     ).orderBy(F.desc("completed_at"))

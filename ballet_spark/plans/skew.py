@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ballet_spark.operators.asof import asof_join, asof_join_broadcast
+from ballet_spark.session import local_frame
 
 
 HEAD_KEYS_HARD_CAP = 10_000
@@ -435,8 +436,8 @@ def skew_report(df: DataFrame, key: str = "url", top_k: int = 10) -> DataFrame:
     # empty input: sum() aggregates to NULL — report a zero row, don't
     # crash the planner diagnostic on degenerate input
     rows = int(total["rows"] or 0)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [
             (
                 rows,

@@ -67,6 +67,53 @@ def test_components_fast_path_matches_distributed_loop(spark):
     }
 
 
+@pytest.mark.parametrize(
+    "id_type, ids",
+    [("long", list(range(40))), ("string", [f"d{i:02d}" for i in range(40)])],
+)
+def test_components_small_graph_path_output_unchanged(spark, monkeypatch,
+                                                      id_type, ids):
+    """The small-graph path is taken up to the cap exactly (one capped
+    collect decides it) and gives the distributed loop's output and id
+    type, for int and string ids."""
+    import random
+
+    from ballet_spark.operators import components
+
+    rnd = random.Random(11)
+    edges = {(rnd.choice(ids), rnd.choice(ids)) for _ in range(60)}
+    edges = sorted((a, b) for a, b in edges if a != b)
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    built = []
+    local_frame = components.local_frame
+    monkeypatch.setattr(
+        components, "local_frame",
+        lambda *a: built.append(a) or local_frame(*a),
+    )
+
+    def run(cap):
+        out = connected_components(pairs, small_graph_threshold=cap)
+        assert out.columns == ["id", "component"]
+        assert [f.dataType for f in out.schema] == [pairs.schema["id_a"].dataType] * 2
+        return sorted(tuple(r) for r in out.collect())
+
+    small = run(len(edges))
+    assert len(built) == 1
+    dist = run(len(edges) - 1)
+    assert len(built) == 1  # one edge past the cap: the distributed loop
+    assert small == dist
+    assert {c for _, c in small} < set(ids)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_components_empty_pairs_keep_id_type(spark, id_type):
+    pairs = spark.createDataFrame([], f"id_a {id_type}, id_b {id_type}")
+    out = connected_components(pairs)
+    assert out.count() == 0
+    assert out.columns == ["id", "component"]
+    assert [f.dataType for f in out.schema] == [pairs.schema["id_a"].dataType] * 2
+
+
 def test_canonical_docs_keeps_min_and_singletons(spark):
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in range(6)], "doc_id long, text string"

@@ -288,3 +288,51 @@ def test_feature_digest_is_permutation_sensitive(spark):
     da = fold_digest(a.agg(F.sum(row_hash(["url", "ts", "f"]))).first()[0])
     db = fold_digest(b.agg(F.sum(row_hash(["url", "ts", "f"]))).first()[0])
     assert da != db
+
+
+def test_noop_resume_launches_one_job(spark, webtext_df, tmp_path):
+    """A fully materialized matrix re-runs as ONE Spark job: the lineage
+    read has a known schema (no inference job) and its (unit, n_units)
+    rows come back in one collect (no distinct() shuffles)."""
+    sc = spark.sparkContext
+    args = (spark, webtext_df, FEATS, str(tmp_path / "o"), str(tmp_path / "l"), "s")
+    materialize(*args, n_units=4)
+    group = f"noop-resume-{tmp_path.name}"
+    sc.setJobGroup(group, "no-op resume")
+    try:
+        again = materialize(*args, n_units=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert again["units_computed"] == 0 and again["units_skipped"] == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_resume_with_other_n_units_raises(spark, webtext_df, tmp_path):
+    """Units of different pmod layouts cannot be mixed in one matrix."""
+    args = (spark, webtext_df, FEATS, str(tmp_path / "o"), str(tmp_path / "l"), "s")
+    materialize(*args, n_units=4)
+    with pytest.raises(ValueError, match=r"n_units=\[4\]; resuming with n_units=3"):
+        materialize(*args, n_units=3)
+    # another snapshot is another layout: no clash
+    assert materialize(*args[:5], "s2", n_units=3)["units_computed"] == 3
+
+
+def test_lineage_without_n_units_column_resumes(spark, webtext_df, tmp_path):
+    """Lineage written before ``n_units`` was recorded has no such
+    column: a resume over it skips its units and appends new-style rows
+    beside the old files."""
+    from ballet_spark.plans.materialize import completed_units
+
+    out, lin, old = (str(tmp_path / n) for n in ("o", "l", "old"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        materialize(spark, webtext_df, FEATS, out, lin, "s", n_units=3,
+                    fail_after_units=1)
+    spark.read.parquet(lin).drop("n_units").write.parquet(old)
+    assert "n_units" not in spark.read.parquet(old).columns
+    summary = materialize(spark, webtext_df, FEATS, out, old, "s", n_units=3)
+    assert (summary["units_skipped"], summary["units_computed"]) == (1, 2)
+    assert completed_units(spark, old, summary["feature_set"], "s", 3) == {0, 1, 2}
+    got = lineage_metrics(spark, old).toPandas()
+    assert sorted(got["n_units"].isna()) == [False, False, True]
+    assert got["row_count"].sum() == webtext_df.count()
